@@ -1,7 +1,7 @@
 # Convenience targets. The test suite itself is plain pytest; these wrap
 # the environment-gated flows that need services or non-default env.
 
-.PHONY: test bench verify postgres-up postgres-live-test postgres-down \
+.PHONY: test bench perfbench verify postgres-up postgres-live-test postgres-down \
         postgres-local-up postgres-local-test postgres-local-down
 
 test:
@@ -9,6 +9,12 @@ test:
 
 bench:
 	python bench.py
+
+# The repository benchmark (perfbench/README.md): the traced machine_events
+# run prints the per-layer table, then llm_index runs untraced.
+perfbench:
+	python3 perfbench/run.py --workload machine_events --seed 1 --seconds 6 --trace 1
+	python3 perfbench/run.py --workload llm_index --seed 1 --seconds 6 --trace 0
 
 verify:
 	python tools/verify_driver.py --all

@@ -11,9 +11,11 @@ errors (:70-116), enriched-event output (:173-188), hourly summary
    ``Cycle_End`` sharing a millisecond with the next ``Cycle_Start`` (the
    generator emits exactly that) sorts End < measurements < Start, which
    reproduces file order deterministically on any partitioning.
-2. **Cached shared subtree** — the reference recomputes the whole lineage
-   for its second write action (SURVEY.md §3 step 7); ``run`` persists the
-   enriched events once.
+2. **One shared pass** — the reference recomputes the whole lineage for
+   its second write action (SURVEY.md §3 step 7) and joins per-cycle times
+   back onto the events. Here both outputs read one persisted frame in
+   which the per-cycle start and duration are window columns, so nothing
+   is joined back and nothing but that frame is persisted.
 3. **Idempotent summary** — the README documents a staging+merge the code
    never had (D1/D4); the parquet sink overwrites per ``summary_date``
    partition (re-running a day replaces it, byte-identical), and the JDBC
@@ -34,24 +36,22 @@ Two further OUTPUT-SCHEMA deviations, also deliberate:
    column type to do that, so the rounding is applied in the plan to
    keep both sinks byte-equivalent.
 
-Scale: the only shuffles are the per-machine window sort and the two
-hourly aggregations; the cycle-times side of both joins is broadcast
-(8× smaller than events, per the fixed cycle shape). One machine-day is
-~1.15 M rows; the machine_id key domain is what parallelizes a fleet.
+Scale: the only shuffles are the per-machine window sort and the one
+hourly aggregation. The per-cycle window is keyed by (machine_id,
+cycle_seq), which the machine_id hash partitioning already satisfies, so
+it adds a local sort and no exchange. One machine-day is ~1.15 M rows;
+the machine_id key domain is what parallelizes a fleet.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from projekt_data_engineering_iubh_spark.operators.rules import with_error_flag
-from projekt_data_engineering_iubh_spark.operators.sessionize import (
-    with_session_seq,
-    with_session_seq_presorted,
-)
+from projekt_data_engineering_iubh_spark.operators.sessionize import with_session_seq
 from projekt_data_engineering_iubh_spark.pipeline.config import (
     CYCLE_END_EVENT,
     CYCLE_START_EVENT,
@@ -68,28 +68,6 @@ INPUT_SCHEMA = T.StructType(
         T.StructField("value", T.StringType(), True),
     ]
 )
-
-SUMMARY_COLUMNS = [
-    "summary_date",
-    "hour_of_day",
-    "machine_id",
-    "avg_pick_force",
-    "max_pick_force",
-    "min_pick_force",
-    "avg_place_force",
-    "max_place_force",
-    "min_place_force",
-    "as_vacuum_error_count",
-    "pp_vacuum_error_count",
-    "as_release_error_count",
-    "pp_release_error_count",
-    "pick_force_error_count",
-    "place_force_error_count",
-    "cycle_count",
-    "min_cycle_time_seconds",
-    "max_cycle_time_seconds",
-    "avg_cycle_time_seconds",
-]
 
 
 def read_events_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -129,53 +107,59 @@ def _marker_rank() -> F.Column:
     )
 
 
-def compute_cycles(
-    events: DataFrame, *, presorted: bool = False
-) -> tuple[DataFrame, DataFrame]:
+_CYCLE_ORDER = ["event_timestamp", "marker_rank", "parameter_name"]
+
+
+def compute_cycles(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """W1 + A1 + P11: assign cycle_seq by running count of Cycle_Start per
-    machine; derive per-cycle start timestamp and duration from the marker
-    rows. Returns (events_with_cycle_seq, cycle_times).
+    machine, then put each cycle's start timestamp and duration on every
+    row of it. Returns (events_with_cycle_seq, cycle_times).
 
-    ``presorted=True`` selects the two-level prefix-sum sessionizer for
-    time-ordered single-machine files (the reference's actual input shape):
-    ~4× faster on a 1.1M-row machine-day here, and unlike the window it
-    parallelizes across splits instead of serializing on the hot machine
-    key. Only valid when file order == time order.
+    The events frame gains ``cycle_start_ts`` and ``cycle_time_seconds``
+    (NULL on the pre-cycle rows, cycle_seq 0) and ``cycle_head``, true on
+    exactly one row per cycle. Start and end are the min/max marker
+    timestamps over a window on (machine_id, cycle_seq) in the running
+    count's order: that key refines the machine_id partitioning, so the
+    second window costs a local sort and no exchange. ``cycle_times`` is
+    the projection of the head rows, one row per cycle.
     """
-    if presorted:
-        with_seq = with_session_seq_presorted(
-            events,
-            is_marker=F.col("event_name") == CYCLE_START_EVENT,
-            session_col="cycle_seq",
-        )
-    else:
-        with_seq = with_session_seq(
-            events.withColumn("marker_rank", _marker_rank()),
-            partition_by=["machine_id"],
-            order_by=["event_timestamp", "marker_rank", "parameter_name"],
-            is_marker=F.col("event_name") == CYCLE_START_EVENT,
-            session_col="cycle_seq",
-        ).drop("marker_rank")
-
-    boundaries = (
-        with_seq.filter(F.col("cycle_seq") > 0)
-        .filter(F.col("event_name").isin(CYCLE_START_EVENT, CYCLE_END_EVENT))
-        .groupBy("machine_id", "cycle_seq")
-        .agg(
-            F.min("event_timestamp").alias("cycle_start_ts"),
-            F.max("event_timestamp").alias("cycle_end_ts"),
-        )
+    with_seq = with_session_seq(
+        events.withColumn("marker_rank", _marker_rank()),
+        partition_by=["machine_id"],
+        order_by=_CYCLE_ORDER,
+        is_marker=F.col("event_name") == CYCLE_START_EVENT,
+        session_col="cycle_seq",
     )
-    cycle_times = boundaries.withColumn(
-        "cycle_time_seconds",
+    in_cycle = F.col("cycle_seq") > 0
+    cycle = Window.partitionBy("machine_id", "cycle_seq").orderBy(*_CYCLE_ORDER)
+    whole = cycle.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    marker_ts = F.when(
+        in_cycle & F.col("event_name").isin(CYCLE_START_EVENT, CYCLE_END_EVENT),
+        F.col("event_timestamp"),
+    )
+    bounds = with_seq.select(
+        *events.columns,
+        "cycle_seq",
+        F.min(marker_ts).over(whole).alias("cycle_start_ts"),
+        F.max(marker_ts).over(whole).alias("cycle_end_ts"),
+        (in_cycle & (F.row_number().over(cycle) == 1)).alias("cycle_head"),
+    )
+    with_seq = bounds.select(
+        *events.columns,
+        "cycle_seq",
+        "cycle_start_ts",
         F.round(
             (
                 F.unix_micros("cycle_end_ts") - F.unix_micros("cycle_start_ts")
             )
             / F.lit(1000000.0),
             3,
-        ),
-    ).select("machine_id", "cycle_seq", "cycle_start_ts", "cycle_time_seconds")
+        ).alias("cycle_time_seconds"),
+        "cycle_head",
+    )
+    cycle_times = with_seq.filter("cycle_head").select(
+        "machine_id", "cycle_seq", "cycle_start_ts", "cycle_time_seconds"
+    )
     return with_seq, cycle_times
 
 
@@ -184,26 +168,17 @@ def flag_errors(events: DataFrame, rules: dict[str, Any]) -> DataFrame:
     return with_error_flag(events, rules, PARAMETER_EVENT_MAPPING)
 
 
-def enriched_events(events_err: DataFrame, cycle_times: DataFrame) -> DataFrame:
-    """J1 + P13 + P5: attach per-cycle duration to every event row."""
-    return (
-        events_err.join(
-            F.broadcast(
-                cycle_times.select("machine_id", "cycle_seq", "cycle_time_seconds")
-            ),
-            on=["machine_id", "cycle_seq"],
-            how="left",
-        )
-        .select(
-            "event_timestamp",
-            "machine_id",
-            "event_name",
-            "parameter_name",
-            F.round("value", 2).alias("value"),
-            "is_error",
-            "cycle_seq",
-            "cycle_time_seconds",
-        )
+def enriched_events(events_err: DataFrame) -> DataFrame:
+    """J1 + P13 + P5: every event row with its cycle's duration."""
+    return events_err.select(
+        "event_timestamp",
+        "machine_id",
+        "event_name",
+        "parameter_name",
+        F.round("value", 2).alias("value"),
+        "is_error",
+        "cycle_seq",
+        "cycle_time_seconds",
     )
 
 
@@ -214,14 +189,29 @@ def _force(name: str, param: str) -> F.Column:
     )
 
 
+def _or_zero(agg: F.Column) -> F.Column:
+    """``fillna(0)`` of a count aggregate, as ``fillna`` builds it: the
+    column is nullable in the schema, and the optimizer folds the cast, so
+    the written parquet column is required."""
+    return F.coalesce(agg, F.lit(0.0).cast("long"))
+
+
+def _rounded(agg: F.Column, scale: int) -> F.Column:
+    """``fillna(0)`` of a double aggregate (NULL and NaN become 0), then
+    rounded to ``scale`` places."""
+    return F.round(F.coalesce(F.nanvl(agg, F.lit(None)), F.lit(0.0)), scale)
+
+
 def _err_count(param: str, event: str) -> F.Column:
-    return F.sum(
-        F.when(
-            (F.col("parameter_name") == param)
-            & (F.col("event_name") == event)
-            & (F.col("is_error") == 1),
-            1,
-        ).otherwise(0)
+    return _or_zero(
+        F.sum(
+            F.when(
+                (F.col("parameter_name") == param)
+                & (F.col("event_name") == event)
+                & (F.col("is_error") == 1),
+                1,
+            ).otherwise(0)
+        )
     )
 
 
@@ -229,91 +219,65 @@ def hourly_summary(events_err: DataFrame, cycle_times: DataFrame) -> DataFrame:
     """A2 + A3 + J2 + J3 + P14/P15/P13: the 19-column wide hourly rollup.
 
     Events bucket into the hour their *cycle started* (reference joins
-    cycle_start_ts back before extracting date/hour, :207-214)."""
-    cyc = (
-        cycle_times.withColumn("summary_date", F.to_date("cycle_start_ts"))
-        .withColumn("hour_of_day", F.hour("cycle_start_ts"))
-        .filter(F.col("summary_date").isNotNull())
-    )
-    cycle_summary = cyc.groupBy("summary_date", "hour_of_day", "machine_id").agg(
-        F.countDistinct("cycle_seq").alias("cycle_count"),
-        F.avg("cycle_time_seconds").alias("avg_cycle_time_seconds"),
-        F.min("cycle_time_seconds").alias("min_cycle_time_seconds"),
-        F.max("cycle_time_seconds").alias("max_cycle_time_seconds"),
-    )
-
-    ev = (
-        events_err.join(
-            F.broadcast(
-                cycle_times.select("machine_id", "cycle_seq", "cycle_start_ts")
+    cycle_start_ts back before extracting date/hour, :207-214).
+    ``events_err`` carries ``compute_cycles``' cycle columns, so one
+    aggregate over the in-cycle rows yields both halves of the rollup; the
+    cycle figures read only the one head row per cycle. The reference's
+    full outer join of the two halves is exact as one aggregate: a cycle's
+    head row lies in its own hour, so both halves have the same keys. The
+    zero-fill and rounding that followed the join are kept, expression for
+    expression, so schema and written files stay as they were.
+    ``cycle_times`` is not read: the head rows carry the same values.
+    """
+    start = F.col("cycle_start_ts")
+    head_time = F.when(F.col("cycle_head"), F.col("cycle_time_seconds"))
+    return (
+        events_err.filter(F.col("cycle_seq") > 0)
+        .groupBy(
+            F.to_date(start).alias("summary_date"),
+            F.hour(start).alias("hour_of_day"),
+            "machine_id",
+        )
+        .agg(
+            _rounded(F.avg(_force("Pick_Check", "PP_Force")), 2).alias(
+                "avg_pick_force"
             ),
-            on=["machine_id", "cycle_seq"],
-            how="left",
-        )
-        .withColumn("summary_date", F.to_date("cycle_start_ts"))
-        .withColumn("hour_of_day", F.hour("cycle_start_ts"))
-        .filter(F.col("summary_date").isNotNull())
-    )
-    event_summary = ev.groupBy("summary_date", "hour_of_day", "machine_id").agg(
-        F.avg(_force("Pick_Check", "PP_Force")).alias("avg_pick_force"),
-        F.max(_force("Pick_Check", "PP_Force")).alias("max_pick_force"),
-        F.min(_force("Pick_Check", "PP_Force")).alias("min_pick_force"),
-        F.avg(_force("Place_Check", "PP_Force")).alias("avg_place_force"),
-        F.max(_force("Place_Check", "PP_Force")).alias("max_place_force"),
-        F.min(_force("Place_Check", "PP_Force")).alias("min_place_force"),
-        _err_count("AS_VacuumUnits", "AS_Check").alias("as_vacuum_error_count"),
-        _err_count("PP_VacuumUnits", "Pick_Check").alias("pp_vacuum_error_count"),
-        _err_count("AS_VacuumUnits", "AS_Blowoff_Check").alias(
-            "as_release_error_count"
-        ),
-        _err_count("PP_VacuumUnits", "Place_Check").alias("pp_release_error_count"),
-        _err_count("PP_Force", "Pick_Check").alias("pick_force_error_count"),
-        _err_count("PP_Force", "Place_Check").alias("place_force_error_count"),
-        F.sum("is_error").alias("total_error_count"),
-    )
-
-    summary = (
-        cycle_summary.join(
-            event_summary,
-            on=["summary_date", "hour_of_day", "machine_id"],
-            how="outer",
-        )
-        .fillna(
-            0,
-            subset=[
-                "cycle_count",
-                "avg_cycle_time_seconds",
-                "min_cycle_time_seconds",
-                "max_cycle_time_seconds",
-                "avg_pick_force",
-                "max_pick_force",
-                "min_pick_force",
-                "avg_place_force",
-                "max_place_force",
-                "min_place_force",
-                "as_vacuum_error_count",
-                "pp_vacuum_error_count",
-                "as_release_error_count",
-                "pp_release_error_count",
-                "pick_force_error_count",
-                "place_force_error_count",
-                "total_error_count",
-            ],
+            _rounded(F.max(_force("Pick_Check", "PP_Force")), 2).alias(
+                "max_pick_force"
+            ),
+            _rounded(F.min(_force("Pick_Check", "PP_Force")), 2).alias(
+                "min_pick_force"
+            ),
+            _rounded(F.avg(_force("Place_Check", "PP_Force")), 2).alias(
+                "avg_place_force"
+            ),
+            _rounded(F.max(_force("Place_Check", "PP_Force")), 2).alias(
+                "max_place_force"
+            ),
+            _rounded(F.min(_force("Place_Check", "PP_Force")), 2).alias(
+                "min_place_force"
+            ),
+            _err_count("AS_VacuumUnits", "AS_Check").alias("as_vacuum_error_count"),
+            _err_count("PP_VacuumUnits", "Pick_Check").alias(
+                "pp_vacuum_error_count"
+            ),
+            _err_count("AS_VacuumUnits", "AS_Blowoff_Check").alias(
+                "as_release_error_count"
+            ),
+            _err_count("PP_VacuumUnits", "Place_Check").alias(
+                "pp_release_error_count"
+            ),
+            _err_count("PP_Force", "Pick_Check").alias("pick_force_error_count"),
+            _err_count("PP_Force", "Place_Check").alias("place_force_error_count"),
+            _or_zero(F.sum(F.when(F.col("cycle_head"), 1).otherwise(0))).alias(
+                "cycle_count"
+            ),
+            _rounded(F.min(head_time), 3).alias("min_cycle_time_seconds"),
+            _rounded(F.max(head_time), 3).alias("max_cycle_time_seconds"),
+            _rounded(F.avg(head_time), 3).alias("avg_cycle_time_seconds"),
+            _or_zero(F.sum("is_error")).alias("total_error_count"),
         )
     )
-    for col, scale in [
-        ("min_cycle_time_seconds", 3),
-        ("max_cycle_time_seconds", 3),
-        ("avg_cycle_time_seconds", 3),
-        ("avg_pick_force", 2),
-        ("max_pick_force", 2),
-        ("min_pick_force", 2),
-        ("avg_place_force", 2),
-        ("max_place_force", 2),
-        ("min_place_force", 2),
-    ]:
-        summary = summary.withColumn(col, F.round(F.col(col), scale))
-    return summary.select(*SUMMARY_COLUMNS, "total_error_count")
 
 
 def transform(
@@ -323,9 +287,7 @@ def transform(
     events = cleanse(raw)
     with_seq, cycle_times = compute_cycles(events)
     events_err = flag_errors(with_seq, rules)
-    return enriched_events(events_err, cycle_times), hourly_summary(
-        events_err, cycle_times
-    )
+    return enriched_events(events_err), hourly_summary(events_err, cycle_times)
 
 
 def run(
@@ -342,43 +304,35 @@ def run(
       (summary_date, machine_id): re-running a machine-day replaces exactly
       that pair — the idempotent merge the reference documents but never
       implemented (D1), at the granularity its per-machine daily files
-      actually arrive in.
+      actually arrive in. The mode is set on the writer, so the caller's
+      session conf is left as it was.
     """
-    events_err_cached = None
-    raw = read_events_csv(spark, input_csv)
-    events = cleanse(raw)
-    with_seq, cycle_times = compute_cycles(events)
-    events_err_cached = flag_errors(with_seq, rules).persist()
-    cycle_times = cycle_times.persist()
+    events_path = f"{output_dir}/processed_machine_events"
+    summary_path = f"{output_dir}/hourly_machine_summary"
+    with_seq, cycle_times = compute_cycles(cleanse(read_events_csv(spark, input_csv)))
+    events_err = flag_errors(with_seq, rules).persist()
     try:
-        enriched = enriched_events(events_err_cached, cycle_times)
-        summary = hourly_summary(events_err_cached, cycle_times)
-
-        (
-            enriched.withColumn("event_date", F.to_date("event_timestamp"))
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(f"{output_dir}/processed_machine_events")
+        enriched = enriched_events(events_err).withColumn(
+            "event_date", F.to_date("event_timestamp")
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        summary = hourly_summary(events_err, cycle_times)
+        enriched.write.mode("append").partitionBy("event_date").parquet(events_path)
         # partition by (date, machine): a rerun of one machine-day replaces
         # exactly that pair — partitioning by date alone would clobber other
         # machines' rows for the same day when jobs run per machine-file
         (
             summary.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("summary_date", "machine_id")
-            .parquet(f"{output_dir}/hourly_machine_summary")
+            .parquet(summary_path)
         )
-        n_events = spark.read.parquet(
-            f"{output_dir}/processed_machine_events"
-        ).count()
-        n_summary = spark.read.parquet(
-            f"{output_dir}/hourly_machine_summary"
-        ).count()
+        # the written schemas are known: reading with them skips the
+        # footer-inference job of each count
+        n_events = spark.read.schema(enriched.schema).parquet(events_path).count()
+        n_summary = spark.read.schema(summary.schema).parquet(summary_path).count()
         return {"events": n_events, "summary_rows": n_summary}
     finally:
-        events_err_cached.unpersist()
-        cycle_times.unpersist()
+        events_err.unpersist()
 
 
 def validate_input_filename(name: str) -> str | None:

@@ -14,8 +14,9 @@ dependencies):
   naming the current version;
 * every write — initial load, compaction, Z-order relayout, a corrected
   day — lands in a FRESH version dir, invisible to readers while being
-  written; the version dir is CLAIMED via atomic ``mkdir`` so two
-  writers can never interleave files in one snapshot;
+  written; the version dir is CLAIMED via an exclusive create of its
+  hidden claim file so two writers can never interleave files in one
+  snapshot;
 * the commit is ``os.replace(tmp, manifest)`` — atomic on POSIX (rename(2)
   within one filesystem), so a reader resolving the manifest sees the old
   snapshot or the new one, never a mix;
@@ -218,18 +219,31 @@ class ConditionalPutBackend(CommitBackend):
 DEFAULT_BACKEND: CommitBackend = FlockBackend()
 
 
+def _claim_file(data_dir: Path) -> Path:
+    return data_dir.with_name(f".{data_dir.name}.claim")
+
+
 def _claim_version_dir(root: Path, start: int) -> tuple[int, Path]:
-    """Atomically claim the next free version dir via mkdir (EEXIST ⇒
-    another writer holds it — move on). Two writers can therefore never
-    interleave files inside one snapshot dir."""
+    """Atomically claim the next free version dir: skip dirs that exist,
+    then create the dir's hidden claim file exclusively (EEXIST ⇒ another
+    writer holds it — move on). The claim is a file beside the dir, not
+    the dir itself, because a ``write_fn`` may delete and recreate its dir
+    (a static-mode ``overwrite`` does), which would free a mkdir claim
+    while its write runs. Two writers can therefore never interleave files
+    inside one snapshot dir. ``commit_snapshot`` removes the claim file
+    when the commit ends."""
     version = start
     while True:
         data_dir = root / _VERSION_FMT.format(version)
-        try:
-            data_dir.mkdir()
-            return version, data_dir
-        except FileExistsError:
-            version += 1
+        if not data_dir.exists():
+            try:
+                _claim_file(data_dir).touch(exist_ok=False)
+            except FileExistsError:
+                pass
+            else:
+                data_dir.mkdir(exist_ok=True)
+                return version, data_dir
+        version += 1
 
 
 def _publish(
@@ -306,6 +320,9 @@ def commit_snapshot(
     except BaseException:
         shutil.rmtree(data_dir, ignore_errors=True)
         raise
+    finally:
+        # after the rmtree, so a failed version is free only once removed
+        _claim_file(data_dir).unlink(missing_ok=True)
     return Snapshot(version=version, data_dir=str(data_dir))
 
 

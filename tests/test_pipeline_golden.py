@@ -162,3 +162,71 @@ def test_idempotent_summary_rerun(spark, fixture_csv, tmp_path):
     assert second["events"] == 2 * first["events"]
     summary = spark.read.parquet(f"{out}/hourly_machine_summary")
     assert summary.count() == 3
+
+
+# Two identical Cycle_Start rows and two identical Cycle_End rows: the
+# duplicates are peers in the running count's RANGE frame, so both starts
+# give every row of the cycle cycle_seq 2, and the pair still makes one
+# cycle. It starts in hour 2 and ends in hour 3; it buckets by its start.
+DUPLICATE_MARKER_ROWS = [
+    "timestamp,machine_id,event_name,parameter_name,value",
+    "2024-05-01T02:59:59.800Z,M9,Cycle_Start,,",
+    "2024-05-01T02:59:59.800Z,M9,Cycle_Start,,",
+    "2024-05-01T02:59:59.900Z,M9,Pick_Check,PP_Force,130.0",  # err >120
+    "2024-05-01T03:00:00.300Z,M9,Cycle_End,,",
+    "2024-05-01T03:00:00.300Z,M9,Cycle_End,,",
+]
+
+
+def test_duplicate_markers_make_one_cycle(spark, tmp_path):
+    p = tmp_path / "dup.csv"
+    p.write_text("\n".join(DUPLICATE_MARKER_ROWS) + "\n")
+    raw = da.read_events_csv(spark, str(p))
+    enriched, summary = da.transform(raw, DEFAULT_RULES)
+
+    assert sorted((r.cycle_seq, r.cycle_time_seconds) for r in enriched.collect()) == [
+        (2, 0.5)
+    ] * 5
+    _, cycle_times = da.compute_cycles(da.cleanse(raw))
+    assert [(r.machine_id, r.cycle_seq, r.cycle_time_seconds)
+            for r in cycle_times.collect()] == [("M9", 2, 0.5)]
+
+    (row,) = summary.collect()
+    assert (str(row.summary_date), row.hour_of_day, row.machine_id) == (
+        "2024-05-01", 2, "M9")
+    assert row.cycle_count == 1
+    assert row.min_cycle_time_seconds == row.max_cycle_time_seconds == 0.5
+    assert row.avg_cycle_time_seconds == 0.5
+    assert row.avg_pick_force == 130.0
+    assert row.pick_force_error_count == row.total_error_count == 1
+
+
+def test_run_job_count(spark, fixture_csv, tmp_path):
+    """One file costs at most 8 Spark jobs: the window's shuffle map and
+    the events write, the summary aggregate's shuffle map and its write,
+    and a shuffle map plus a result job for each of the two closing
+    counts."""
+    sc = spark.sparkContext
+    group = "test_run_job_count"
+    sc.setJobGroup(group, "daily_aggregator.run on the golden fixture")
+    try:
+        da.run(spark, fixture_csv, str(tmp_path / "warehouse"), DEFAULT_RULES)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+
+
+def test_run_leaves_overwrite_mode_conf(spark, fixture_csv, tmp_path):
+    """The summary's dynamic partition overwrite is a writer option, so
+    a later plain overwrite in the same session is not made dynamic."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        da.run(spark, fixture_csv, str(tmp_path / "warehouse"), DEFAULT_RULES)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)

@@ -47,6 +47,23 @@ def test_overwrite_partitions_is_idempotent(spark, tmp_path):
     assert pq.read(spark, path).count() == n1
 
 
+
+def test_overwrite_partitions_leaves_session_conf(spark, tmp_path):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+        path = str(tmp_path / "t")
+        pq.write_partitioned(df, path, partition_by=["k"], mode="overwrite_partitions")
+        pq.write_partitioned(
+            df.filter("k = 1"), path, partition_by=["k"], mode="overwrite_partitions"
+        )
+        assert spark.conf.get(key) == "static"
+        assert pq.read(spark, path).count() == 2  # k=2 kept: dynamic
+    finally:
+        spark.conf.set(key, before)
+
 def test_merge_sql_shape():
     sql = jdbc.merge_sql(
         "hourly_machine_summary",

@@ -255,6 +255,34 @@ def test_commit_conflict_is_raised_and_orphan_removed(spark, tmp_path, backend):
     assert dirs == {"v00000001", "v00000002", "v00000004"}, dirs
 
 
+
+def test_claim_outlives_write_fn_removing_its_dir(spark, tmp_path, backend):
+    """A static-mode overwrite deletes its output dir before it writes.
+    The version must stay claimed meanwhile: a writer starting in that
+    window takes the next version, not a dir another write is filling."""
+    import shutil
+
+    root = str(tmp_path / "claimstore")
+    _write_rows(spark, 50, root)
+    store.init_store(root)
+    inner = []
+
+    def removing_write(d):
+        shutil.rmtree(d)
+        inner.append(
+            store.commit_snapshot(
+                root, lambda d2: _write_rows(spark, 70, d2), backend=backend
+            )
+        )
+        _write_rows(spark, 80, d)
+
+    with pytest.raises(store.CommitConflict):
+        store.commit_snapshot(root, removing_write, backend=backend)
+
+    assert inner[0].version == 3
+    assert store.current_version(root) == 3
+    assert store.read(spark, root).count() == 70
+
 def test_time_travel_reads(spark, tmp_path):
     root = str(tmp_path / "ttstore")
     _write_rows(spark, 100, root)
