@@ -1,11 +1,16 @@
 # Convenience targets. The test suite itself is plain pytest; these wrap
 # the environment-gated flows that need services or non-default env.
 
-.PHONY: test bench perfbench verify postgres-up postgres-live-test postgres-down \
+.PHONY: test test-full bench perfbench verify postgres-up postgres-live-test postgres-down \
         postgres-local-up postgres-local-test postgres-local-down
 
 test:
 	python -m pytest tests/ -q
+
+# The complete suite, including the heavy lifecycle/stream files that the
+# default run skips (tests/conftest.py::_HEAVY_TEST_FILES).
+test-full:
+	SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
 
 bench:
 	python bench.py

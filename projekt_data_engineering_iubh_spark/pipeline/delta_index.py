@@ -13,7 +13,7 @@ band rows, ``(vec_id,)`` for bucket rows).
 
 The snapshot-generation ANN roots (ivfpq/routed) have their own shared
 wiring (streaming/ann_ingest_stream._make_append_processor + the
-vq generation primitives); the four-store lifecycle matrix test
+pipeline/ann_index generation primitives); the four-store lifecycle matrix test
 (tests/test_stream_store_matrix.py) pins all four behind one contract —
 since r13 including the DELETE leg: delete_index_keys /
 resurrect_index_keys below give both band tiers the same O(|keys|)
@@ -117,7 +117,7 @@ def _link_snapshot_files(src_dir: str, dst_dir: str) -> None:
     them: hardlink (O(#files) metadata ops regardless of bytes) with a
     copy fallback for cross-device stores — what makes a tombstone
     commit O(|keys|) instead of O(index) (the ANN tiers'
-    _link_or_copy_parquet shape, plans/vector_queries.py:3875)."""
+    _link_or_copy_parquet shape in pipeline/ann_index.py)."""
     os.makedirs(dst_dir, exist_ok=True)
     for name in os.listdir(src_dir):
         src = os.path.join(src_dir, name)
@@ -138,7 +138,7 @@ def delete_index_keys(
     before this, a GDPR-erased document's band/bucket rows stayed live
     until a full rebuild, so a deleted doc could still suppress future
     near-duplicates of itself). Same contract as the ANN tiers'
-    _delete_generation: ``keys`` is a one-column frame of doc-level ids
+    ann_index.delete_generation: ``keys`` is a one-column frame of doc-level ids
     (doc_id / vec_id — the column NAME travels into the tombstone
     artifact and is what reads anti-join on); only ids currently live in
     the view become new tombstones, so unknown or already-dead keys

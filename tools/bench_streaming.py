@@ -359,9 +359,7 @@ def bench_deletes(spark, work: Path, sf_dir: str, batches: int) -> dict:
     from pyspark.sql import Window
 
     from projekt_data_engineering_iubh_spark.catalog import load_table
-    from projekt_data_engineering_iubh_spark.plans import (
-        vector_queries as vq,
-    )
+    from projekt_data_engineering_iubh_spark.pipeline import ann_index
     from projekt_data_engineering_iubh_spark.streaming.ann_ingest_stream import (
         bootstrap_codes_index,
         start_codes_delete_stream,
@@ -412,7 +410,7 @@ def bench_deletes(spark, work: Path, sf_dir: str, batches: int) -> dict:
         q.stop()
     from projekt_data_engineering_iubh_spark.pipeline import store
 
-    live = vq.read_live_codes(spark, store.resolve(root)).count()
+    live = ann_index.read_live_codes(spark, store.resolve(root)).count()
     return {
         "tier": "delete_stream",
         "sf_dir": sf_dir,

@@ -16,7 +16,7 @@ numbers on a replica corpus:
 * tombstone sensitivity: extra delete generations pushed onto the SAME
   root (10% -> ~30% dead), re-timing the serve join warmed — the serve
   anti-join is a broadcast key set, so the wall should stay flat (the
-  join-face analog of the r10 delete_serve_curve).
+  join-face analog of the r10 delete-serve curve in BASELINE.md).
 
 Caveats (documented, not hidden): the two arms share the corpus but
 not the codebook geometry (#155 trains M=4 books on the full corpus;
@@ -70,6 +70,7 @@ def main() -> int:
 
     from ann_scale_point import build_embeddings_replicas
 
+    from projekt_data_engineering_iubh_spark.pipeline import ann_index
     from projekt_data_engineering_iubh_spark.plans import all_queries
     from projekt_data_engineering_iubh_spark.plans import (
         vector_queries as vq,
@@ -135,7 +136,7 @@ def main() -> int:
             if len(extra) == 1
             else (F.col("vec_id") % 10).isin(extra)
         ).select("vec_id")
-        vq.ivfpq_delete_generation(spark, root, keys)
+        ann_index.delete_generation(spark, root, keys)
         df = qs["emb_knn_join_serve"].fn(spark, args.out)
         df.count()  # warm
         walls = []
@@ -145,7 +146,7 @@ def main() -> int:
             walls.append(round(time.time() - t0, 3))
         from projekt_data_engineering_iubh_spark.pipeline import store
 
-        live = vq.read_live_codes(spark, store.resolve(root)).count()
+        live = ann_index.read_live_codes(spark, store.resolve(root)).count()
         out["tombstone_arm"].append(
             {
                 "extra_residues": extra,
